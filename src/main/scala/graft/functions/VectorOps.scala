@@ -90,18 +90,4 @@ object VectorOps {
       val planeCol = array(p.map(lit): _*)
       when(dot(vec, planeCol) >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** Split a `bits`-wide signature into `bands` band values; candidate
-    * pairs share at least one band. Returns array<struct<band:int,val:long>>
-    * ready to explode — the banded join replaces the all-pairs cross
-    * product with a shuffle on (band, value).
-    */
-  def bandedSignature(sig: Column, bits: Int, bands: Int): Column = {
-    require(bits % bands == 0, s"bits $bits not divisible by bands $bands")
-    val r = bits / bands
-    val mask = (1L << r) - 1
-    array((0 until bands).map { j =>
-      struct(lit(j).as("band"), (shiftright(sig, j * r).bitwiseAND(lit(mask))).as("val"))
-    }: _*)
-  }
 }

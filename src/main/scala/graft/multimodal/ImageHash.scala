@@ -5,6 +5,8 @@ import java.awt.image.BufferedImage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Banding
+
 /** Perceptual image dedup — the multimodal face of the near-dup
   * family: a 64-bit average hash (aHash: grayscale, 8×8 downsample,
   * bit j set when the cell beats the mean) computed executor-side with
@@ -102,27 +104,12 @@ object ImageHash {
       maxHamming: Int): DataFrame = {
     val pinned = graft.core.CacheBin.trackEager(
       hashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val k = maxHamming + 1
-    // rename first, explode second: referencing an alias from the same
-    // select inside a Generate trips the lateral-column-alias analyzer
     val renamed = pinned.select(col(idCol).as("__id"), col(hashCol).as("__ph"))
-    val banded = renamed.select(col("__id"), col("__ph"),
-      explode(array((0 until k).map { j =>
-        val lo = j * 64 / k
-        val hi = (j + 1) * 64 / k // band j covers bits [lo, hi)
-        val width = hi - lo
-        val mask = if (width >= 64) -1L else (1L << width) - 1L
-        struct(lit(j).as("band"),
-          shiftrightunsigned(col("__ph"), lo).bitwiseAND(lit(mask)).as("val"))
-      }: _*)).as("__b"))
-      .select(col("__id"), col("__ph"),
-        col("__b.band").as("band"), col("__b.val").as("val"))
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.val") === col("r.val") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"),
-        bit_count(col("l.__ph").bitwiseXOR(col("r.__ph"))).as("hamming"))
+    val banded = Banding.explode(renamed, Seq("__id", "__ph"),
+      Banding.bitSlices(col("__ph"), 64, maxHamming + 1))
+    Banding.selfPairs(banded, Seq("__ph"))
+      .select(col("id1"), col("id2"),
+        bit_count(col("__ph1").bitwiseXOR(col("__ph2"))).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }

@@ -221,6 +221,37 @@ object CorpusPipeline {
     df
   }
 
+  // Stage boundaries are materialized (eager localCheckpoint) ON
+  // DEMAND: every join-back stage consumes its input >= 2 times (the
+  // left side plus the operator output DERIVED FROM that same
+  // input), so each such INPUT is flattened to a materialized scan
+  // first — left unmaterialized, the previous stage's whole subtree
+  // re-evaluates per consumer and the cost compounds
+  // multiplicatively down the chain (measured 2x+ on the
+  // full-pipeline bench entry). A stage's OUTPUT, by contrast, is
+  // NOT eagerly materialized: whether it needs to be depends on the
+  // NEXT consumer, which `flatten` decides — a filter-only handoff
+  // (byte repair, quality gates, repetition gate) flows as cheap
+  // re-scannable lineage, removing the redundant checkpoints the
+  // r13 bench measured as the dominant cost of the all-stages-on
+  // pipeline (~1.8x one-shot vs min-of-2). One flat one-row-per-doc
+  // frame per materialized boundary is also the production shape at
+  // 100 TB: a curation run writes its stage outputs (the checkpoint
+  // is the in-session stand-in), and every stage plans against a
+  // flat scan instead of a re-nested lineage. Checkpoints register
+  // with CacheBin (trackCheckpoint — DataFrame.unpersist cannot
+  // free a checkpoint's RDD blocks) so the caller's drain releases
+  // them; left untracked, repeated prepare() calls in a long-lived
+  // session would accumulate executor storage until GC happened to
+  // collect the frames.
+  private def stage(df: DataFrame): DataFrame =
+    graft.core.CacheBin.trackCheckpoint(df.localCheckpoint(true))
+  // `isFlat` = the frame is a materialized scan, or per-row work
+  // over one — cheap to evaluate more than once, so a multi-consumer
+  // stage can read it twice without a new checkpoint
+  private def flatten(df: DataFrame, isFlat: Boolean): DataFrame =
+    if (isFlat) df else stage(df)
+
   /** The materialized artifacts a daily-delta run reuses instead of
     * recomputing the corpus: the accepted-corpus dedup index
     * ([[TextDedup.writeDedupIndex]] / appended by each delta), the
@@ -283,8 +314,6 @@ object CorpusPipeline {
       idCol: String = "doc_id", textCol: String = "text",
       blocklist: Option[DataFrame] = None): DataFrame = {
     val spark = newDocs.sparkSession
-    def stage(df: DataFrame): DataFrame =
-      graft.core.CacheBin.trackCheckpoint(df.localCheckpoint(true))
     val note = (_: String, df: DataFrame) => df
     // 0-0d. identical per-row head
     val (langed, _) = headStages(newDocs, cfg, idCol, textCol, blocklist, note)
@@ -591,10 +620,6 @@ object CorpusPipeline {
     require(blocklist.isEmpty || cfg.urlCol.nonEmpty,
       "a domain blocklist requires urlCol: blocklist filtering is part " +
         "of the URL curation stage and is only applied when urlCol is set")
-    def stage(df: DataFrame): DataFrame =
-      graft.core.CacheBin.trackCheckpoint(df.localCheckpoint(true))
-    def flatten(df: DataFrame, isFlat: Boolean): DataFrame =
-      if (isFlat) df else stage(df)
     // 0. URL/domain curation (optional crawl-first stage)
     val (urled, urledFlat): (DataFrame, Boolean) = cfg.urlCol match {
       case None => (docs, true)
@@ -646,36 +671,6 @@ object CorpusPipeline {
       blocklist: Option[DataFrame],
       report: Option[scala.collection.mutable.ListBuffer[StageRows]]): DataFrame = {
     def note(name: String, df: DataFrame): DataFrame = noteFn(report)(name, df)
-    // Stage boundaries are materialized (eager localCheckpoint) ON
-    // DEMAND: every join-back stage consumes its input >= 2 times (the
-    // left side plus the operator output DERIVED FROM that same
-    // input), so each such INPUT is flattened to a materialized scan
-    // first — left unmaterialized, the previous stage's whole subtree
-    // re-evaluates per consumer and the cost compounds
-    // multiplicatively down the chain (measured 2x+ on the
-    // full-pipeline bench entry). A stage's OUTPUT, by contrast, is
-    // NOT eagerly materialized: whether it needs to be depends on the
-    // NEXT consumer, which `flatten` decides — a filter-only handoff
-    // (byte repair, quality gates, repetition gate) flows as cheap
-    // re-scannable lineage, removing the redundant checkpoints the
-    // r13 bench measured as the dominant cost of the all-stages-on
-    // pipeline (~1.8x one-shot vs min-of-2). One flat one-row-per-doc
-    // frame per materialized boundary is also the production shape at
-    // 100 TB: a curation run writes its stage outputs (the checkpoint
-    // is the in-session stand-in), and every stage plans against a
-    // flat scan instead of a re-nested lineage. Checkpoints register
-    // with CacheBin (trackCheckpoint — DataFrame.unpersist cannot
-    // free a checkpoint's RDD blocks) so the caller's drain releases
-    // them; left untracked, repeated prepare() calls in a long-lived
-    // session would accumulate executor storage until GC happened to
-    // collect the frames.
-    def stage(df: DataFrame): DataFrame =
-      graft.core.CacheBin.trackCheckpoint(df.localCheckpoint(true))
-    // `isFlat` = the frame is a materialized scan, or per-row work
-    // over one — cheap to evaluate more than once, so a multi-consumer
-    // stage can read it twice without a new checkpoint
-    def flatten(df: DataFrame, isFlat: Boolean): DataFrame =
-      if (isFlat) df else stage(df)
 
     note("input", docs)
     // 0-0d. URL curation, byte repair, C4, language ID (shared head)
@@ -794,10 +789,6 @@ object CorpusPipeline {
       blocklist: Option[DataFrame],
       report: Option[scala.collection.mutable.ListBuffer[StageRows]]): DataFrame = {
     def note(name: String, df: DataFrame): DataFrame = noteFn(report)(name, df)
-    def stage(df: DataFrame): DataFrame =
-      graft.core.CacheBin.trackCheckpoint(df.localCheckpoint(true))
-    def flatten(df: DataFrame, isFlat: Boolean): DataFrame =
-      if (isFlat) df else stage(df)
     val decon = curateImpl(docs, evalSet, cfg, idCol, textCol, blocklist, report)
 
     // 5. leakage-safe split; n_tokens feeds every budget downstream —

@@ -203,10 +203,13 @@ object QualityClassifier {
     *     pass re-evaluates once per exploded BUCKET OCCURRENCE
     *     (measured 32 s vs 1.6 s on the sf0.1 classifier entry, same
     *     sums). The fence is a non-moving one: the residual is wrapped
-    *     in a NON-DETERMINISTIC no-op (`when(rand(seed) < 2.0, r)` —
-    *     rand < 1 always, so the value is bit-identical), and the
+    *     in a NON-DETERMINISTIC no-op (`when(rand(seed) =!= -1.0, r)` —
+    *     rand is in [0, 1), so the value is bit-identical), and the
     *     optimizer never collapses, duplicates, or re-sites projections
-    *     containing non-deterministic expressions. Integer sums are
+    *     containing non-deterministic expressions. The test must be an
+    *     equality: Spark's OptimizeRand folds an ordering comparison of
+    *     rand against an out-of-range literal (`rand < 2.0`) to `true`,
+    *     which deletes the fence. Integer sums are
     *     order-independent, so correctness never depended on the
     *     fence — only the 20× evaluation-grain cliff does.
     */
@@ -216,7 +219,7 @@ object QualityClassifier {
     val bucketArr = bucketArrOf(col(textCol), buckets)
     val r = pMicro(marginOf(bucketArr, model)) -
       col(labelCol).cast("long") * lit(1000000L)
-    val rFenced = when(rand(42L) < lit(2.0), r)
+    val rFenced = when(rand(42L) =!= lit(-1.0), r)
     docs
       .select(col(idCol), rFenced.as("__r"),
         concat(bucketArr, array(lit(-1L))).as("__ba"))

@@ -121,18 +121,13 @@ object Similarity {
     */
   def lshCandidatePairs(df: DataFrame, idCol: String, vecCol: String,
       bits: Int = 32, bands: Int = 8, seed: Long = 42L): DataFrame = {
+    require(bits % bands == 0, s"bits $bits not divisible by bands $bands")
     val planes = VectorOps.hyperplanes(
       dim = firstVecLen(df, vecCol), bits = bits, seed = seed)
     val sig = df.select(col(idCol).as("__id"),
       VectorOps.lshSignature(col(vecCol), planes).as("__sig"))
-    val bandsDf = sig.select(col("__id"),
-      explode(VectorOps.bandedSignature(col("__sig"), bits, bands)).as("b"))
-      .select(col("__id"), col("b.band").as("band"), col("b.val").as("val"))
-    bandsDf.as("l")
-      .join(bandsDf.as("r"),
-        col("l.band") === col("r.band") && col("l.val") === col("r.val") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"))
+    Banding.selfPairs(Banding.explode(sig, Seq("__id"),
+      Banding.bitSlices(col("__sig"), bits, bands)), Nil)
       .distinct()
   }
 
@@ -176,7 +171,10 @@ object Similarity {
     // rounds accumulate on the driver (each round's rows were already
     // collected for re-centering) and become ONE local relation at the
     // end, instead of `rounds` nested unions of tiny DataFrames
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Int, Int)]
+    val acc = scala.collection.mutable.ArrayBuffer.empty[(Option[Long], Double, Int, Int)]
+    // a NULL id is None, which sorts first like Spark's ascending order
+    def idOf(row: org.apache.spark.sql.Row): Option[Long] =
+      if (row.isNullAt(0)) None else Some(row.getLong(0))
     for (r <- 1 to rounds) {
       val qCol = array(query.map(lit): _*)
       // global top-k via orderBy+limit = TakeOrderedAndProject (scale-safe,
@@ -203,18 +201,18 @@ object Similarity {
         .limit(k)
         .select(col(idCol), col("score"), col(vecCol))
         .collect() // k rows — tiny by construction
-        .sortBy(row => (-row.getDouble(1), row.getLong(0)))
+        .sortBy(row => (-row.getDouble(1), idOf(row)))
       acc ++= topkRows.zipWithIndex.map { case (row, i) =>
-        (row.getLong(0), row.getDouble(1), i + 1, r)
+        (idOf(row), row.getDouble(1), i + 1, r)
       }
-      seen ++= topkRows.map(_.getLong(0))
+      seen ++= topkRows.flatMap(idOf)
       // next query = per-dimension left-fold double sum of this round's
       // vectors in id order (same direction as the centroid — cosine is
       // scale-invariant — and an order-pinned fold, so any engine
       // reproducing the fold gets bit-identical scores next round)
       if (r < rounds) {
         val vecs = topkRows
-          .sortBy(_.getLong(0))
+          .sortBy(idOf)
           .map(_.getSeq[Float](2).map(_.toDouble).toArray)
         query = vecs.transpose.map(_.foldLeft(0.0)(_ + _)).toSeq
       }

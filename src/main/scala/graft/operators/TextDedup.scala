@@ -71,20 +71,14 @@ object TextDedup {
   def bandValue(sig: Column, j: Int, r: Int): Column =
     aggregate(slice(sig, j * r + 1, r), lit(0L), (acc, x) => acc * 31 + x)
 
-  /** Shared band explode over a frame carrying `__sig`: ONE home for
-    * the banding construction keeps the pair join, the streaming
-    * suppressor, and the DuckDB band mirror in lockstep.
+  /** The `bands` [[bandValue]]s of a frame's `__sig` column, for
+    * [[Banding.explode]]: ONE home for the MinHash band keys keeps the
+    * pair join, the streaming suppressor, the on-disk index and the
+    * DuckDB band mirror in lockstep.
     */
-  private def explodeBands(sig: DataFrame, keepCols: Seq[String],
-      h: Int, bands: Int): DataFrame = {
+  private def sigBands(h: Int, bands: Int): Seq[Column] = {
     require(h % bands == 0, s"h $h not divisible by bands $bands")
-    val r = h / bands
-    val keep = keepCols.map(col)
-    sig
-      .select(keep :+ explode(array((0 until bands).map { j =>
-        struct(lit(j).as("band"), bandValue(col("__sig"), j, r).as("val"))
-      }: _*)).as("b"): _*)
-      .select(keep :+ col("b.band").as("band") :+ col("b.val").as("val"): _*)
+    (0 until bands).map(j => bandValue(col("__sig"), j, h / bands))
   }
 
   /** Candidate pairs sharing at least one MinHash band. */
@@ -107,7 +101,7 @@ object TextDedup {
       .filter(size(col("__shh")) > 0)
       .withColumn("__sig",
         TextHashExpr.minhashSignature(col("__shh"), minhashCoeffs(h, seed)))
-    explodeBands(sig, idCol +: carry, h, bands)
+    Banding.explode(sig, idCol +: carry, sigBands(h, bands))
   }
 
   /** Candidate pairs from a precomputed (id, shingle hashes) table
@@ -118,12 +112,7 @@ object TextDedup {
     val sig = base
       .select(col(idCol).as("__id"), col("__shh"))
       .withColumn("__sig", TextHashExpr.minhashSignature(col("__shh"), minhashCoeffs(h, seed)))
-    val banded = explodeBands(sig, Seq("__id"), h, bands)
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.val") === col("r.val") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"))
+    Banding.selfPairs(Banding.explode(sig, Seq("__id"), sigBands(h, bands)), Nil)
       .distinct()
   }
 
@@ -145,6 +134,12 @@ object TextDedup {
     * which two full-table shuffle joins over the candidate space
     * disappear.
     *
+    * Ids are assumed unique and non-NULL: rows sharing an id never
+    * pair with each other and a NULL id never pairs
+    * ([[Banding.selfPairs]]), and if two rows shared an id, one
+    * `(id1, id2)` could come back once per distinct jaccard of the
+    * rows behind it.
+    *
     * The shingle-hash table still feeds two consumers racing within
     * the one banded self-join job, so it stays persisted
     * MEMORY_AND_DISK (one scan+tokenize+hash pass instead of two).
@@ -164,17 +159,12 @@ object TextDedup {
       .select(col(idCol).as("__id"), col("__shh"))
       .withColumn("__sig",
         TextHashExpr.minhashSignature(col("__shh"), minhashCoeffs(h, seed)))
-    val banded = explodeBands(sig, Seq("__id", "__shh"), h, b)
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.val") === col("r.val") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"),
-        col("l.__shh").as("__sh1"), col("r.__shh").as("__sh2"))
-      .withColumn("__i", size(array_intersect(col("__sh1"), col("__sh2"))))
+    val banded = Banding.explode(sig, Seq("__id", "__shh"), sigBands(h, b))
+    Banding.selfPairs(banded, Seq("__shh"))
+      .withColumn("__i", size(array_intersect(col("__shh1"), col("__shh2"))))
       .withColumn("jaccard",
         col("__i").cast("double") /
-          (size(col("__sh1")) + size(col("__sh2")) - col("__i")).cast("double"))
+          (size(col("__shh1")) + size(col("__shh2")) - col("__i")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
       .distinct()
@@ -210,7 +200,7 @@ object TextDedup {
         .select(col(idCol).as(as), col("__shh").as(shAs))
         .withColumn("__sig",
           TextHashExpr.minhashSignature(col(shAs), minhashCoeffs(h, seed)))
-      explodeBands(sig, Seq(as, shAs), h, bandsN)
+      Banding.explode(sig, Seq(as, shAs), sigBands(h, bandsN))
     }
     val drops = bandsOf(incoming, "__in", "__s1")
       .join(bandsOf(corpus, "__co", "__s2"), Seq("band", "val"))
@@ -277,7 +267,7 @@ object TextDedup {
       // skips row groups whose band-value range contains no incoming
       // signature (the shingle table's id-sorted discipline, applied
       // to the candidate side)
-      explodeBands(sig, Seq(idCol), h, bands)
+      Banding.explode(sig, Seq(idCol), sigBands(h, bands))
         .repartitionByRange(col("band"), col("val"))
         .sortWithinPartitions(col("band"), col("val"))
         .write.mode(mode).partitionBy("band").parquet(s"$path/bands")
@@ -742,7 +732,7 @@ object TextDedup {
     val inSig = inSh.select(col(idCol).as("__in"), col("__shh"))
       .withColumn("__sig",
         TextHashExpr.minhashSignature(col("__shh"), minhashCoeffs(h, seed)))
-    val inBands = explodeBands(inSig, Seq("__in"), h, bands)
+    val inBands = Banding.explode(inSig, Seq("__in"), sigBands(h, bands))
     val idxSh = spark.read.parquet(s"$path/shingles")
       .select(col(idCol).as("__co"), col("__shh").as("__s2"))
     // schema-explicit read: an index seeded from an empty corpus has a
@@ -969,13 +959,11 @@ object TextDedup {
     * ≤ maxHamming differing bits cannot touch every band), candidates
     * verified by true Hamming distance.
     *
-    * Bits are split BALANCED (floor width, the remainder spread one
-    * bit each over the leading bands), so every band covers real
-    * signature bits at any maxHamming ≤ SimhashBits-1. The earlier
-    * uniform-ceil split left whole bands past bit 29 for several
-    * maxHamming values (6, 8, 10, ...) — a constant-zero band value
-    * that put EVERY document in one bucket and degenerated the banded
-    * join into an all-pairs product.
+    * Bits are split by [[Banding.bitSlices]] (floor boundaries), so
+    * every band covers at least one signature bit at any maxHamming ≤
+    * SimhashBits-1. A ceil-width split would leave constant-zero bands
+    * past bit 29 (maxHamming 6, 8, 10, ...) that put EVERY document in
+    * one bucket — an all-pairs product.
     */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, n: Int = 3): DataFrame = {
@@ -987,27 +975,13 @@ object TextDedup {
     // subtree) is shared across both banded-join consumers by
     // ReuseExchange; only the cheap one-row-per-doc final agg + band
     // explode is evaluated per side. Plan-asserted in PlanAuditSpec.
-    val sh = simhash(df, idCol, textCol, n)
-    val baseW = SimhashBits / bands
-    val extra = SimhashBits % bands // leading `extra` bands take one more bit
-    def offset(j: Int): Int = j * baseW + math.min(j, extra)
-    def width(j: Int): Int = baseW + (if (j < extra) 1 else 0)
-    val banded = sh.select(col(idCol).as("__id"), col("simhash"),
-      explode(array((0 until bands).map { j =>
-        struct(lit(j).as("band"),
-          shiftright(col("simhash"), offset(j))
-            .bitwiseAND(lit((1L << width(j)) - 1)).as("val"))
-      }: _*)).as("b"))
-      .select(col("__id"), col("simhash"), col("b.band").as("band"), col("b.val").as("val"))
-    banded.as("l")
-      .join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.val") === col("r.val") &&
-          col("l.__id") < col("r.__id"))
-      .select(col("l.__id").as("id1"), col("r.__id").as("id2"),
-        col("l.simhash").as("__s1"), col("r.simhash").as("__s2"))
+    val sh = simhash(df, idCol, textCol, n).withColumnRenamed(idCol, "__id")
+    val banded = Banding.explode(sh, Seq("__id", "simhash"),
+      Banding.bitSlices(col("simhash"), SimhashBits, bands))
+    Banding.selfPairs(banded, Seq("simhash"))
       .distinct()
       .withColumn("hamming",
-        call_function("bit_count", col("__s1").bitwiseXOR(col("__s2"))))
+        call_function("bit_count", col("simhash1").bitwiseXOR(col("simhash2"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("id1"), col("id2"), col("hamming"))
   }

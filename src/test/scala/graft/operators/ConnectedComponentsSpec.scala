@@ -43,6 +43,39 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(run(1) == run(5))
   }
 
+  test("random chains, cycles, stars and forests: labels equal a union-find minimum") {
+    // seeded property over the star-shaped stop rule: components must
+    // stop exactly when each component is a min-centered star, so every
+    // label must match a driver-side union-find over the same edges
+    val rnd = new scala.util.Random(2026)
+    (0 until 8).foreach { trial =>
+      // shuffled ids: structure order never follows id order
+      val ids = rnd.shuffle((0L until 60L).map(_ * 7 + trial).toList).iterator
+      val edgeList = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      (0 until 2 + rnd.nextInt(4)).foreach { _ =>
+        val nodes = Seq.fill(2 + rnd.nextInt(8))(ids.next())
+        rnd.nextInt(4) match {
+          case 0 => edgeList ++= nodes.zip(nodes.tail) // chain
+          case 1 => edgeList ++= nodes.zip(nodes.tail :+ nodes.head) // cycle
+          case 2 => edgeList ++= nodes.tail.map(nodes.head -> _) // star
+          case _ => // random tree: a forest once the components are unioned
+            edgeList ++= nodes.indices.tail.map(i => nodes(rnd.nextInt(i)) -> nodes(i))
+        }
+      }
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edgeList.foreach { case (u, v) =>
+        val (ru, rv) = (find(u), find(v))
+        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
+      }
+      val expected = parent.keys.map(x => x -> find(x)).toMap
+      assert(labels(edges(edgeList.toSeq: _*)) == expected, s"trial $trial")
+    }
+  }
+
   test("clusterLosers keeps exactly the minimum of each duplicate cluster") {
     val losers = ConnectedComponents.clusterLosers(
       edges(5L -> 9L, 9L -> 7L, 100L -> 101L).toDF("id1", "id2"),

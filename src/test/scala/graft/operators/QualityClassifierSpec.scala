@@ -83,11 +83,21 @@ class QualityClassifierSpec extends SparkSpec {
   }
 
   test("gradient plan: fenced residual below the Generate, no exchange below it") {
+    // parquet input: over a LocalRelation, ConvertToLocalRelation folds
+    // the fence into a LocalTableScan and there is no plan to pin
+    val docs = graft.catalog.Tables.load(spark, sfDir, "documents")
+      .withColumn("lab", (col("source") === "src0").cast("int"))
     val model = QualityClassifier.Model(0L, Array.fill(128)(0L))
     val gf = QualityClassifier.gradientFrame(
-      corpus, "doc_id", "text", "lab", 128, model)
+      docs, "doc_id", "text", "lab", 128, model)
     gf.collect() // execute so the printed plan is the AQE-final truth
-    val lines = gf.queryExecution.executedPlan.toString.linesIterator.toSeq
+    // the final AQE plan only (the ScanMetrics.fromExecuted unwrap): the
+    // initial plan printed after it would put a second tree below
+    val plan = gf.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val lines = plan.toString.linesIterator.toSeq
     val genIdx = lines.indexWhere(_.contains("Generate explode"))
     assert(genIdx >= 0, s"gradient plan must explode bucket ids:\n${lines.mkString("\n")}")
     // (1) evaluation grain: the non-deterministic fence (rand marker)

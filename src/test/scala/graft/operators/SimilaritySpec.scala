@@ -91,6 +91,23 @@ class SimilaritySpec extends SparkSpec {
     assert(byRound(1).map(_.getLong(0)).toSet == Set(0L, 1L, 2L, 3L))
   }
 
+  test("iterativeRetrieve keeps NULL-id rows: they are never excluded as seen") {
+    import spark.implicits._
+    val v0 = clustered.filter(col("vec_id") === 0)
+      .select("embedding").head().getSeq[Float](0)
+    // a NULL-id copy of vec 0: top of round 1, and (anti-join
+    // semantics) still eligible in round 2
+    val corpus = clustered.union(
+      Seq((Option.empty[Long], v0)).toDF("vec_id", "embedding"))
+    val out = Similarity.iterativeRetrieve(
+      corpus, v0.map(_.toDouble), "vec_id", "embedding", k = 5, rounds = 2)
+      .collect()
+    assert(out.length == 10)
+    assert(out.filter(_.isNullAt(0)).map(_.getAs[Int]("round_n")).sorted.toSeq == Seq(1, 2))
+    val ids = out.filterNot(_.isNullAt(0)).map(_.getLong(0))
+    assert(ids.distinct.length == ids.length, "non-NULL ids are retrieved once")
+  }
+
   test("IVF search: probed-cell recall vs exact on clustered data") {
     val queries = clustered.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), col("embedding"))
