@@ -38,9 +38,11 @@ import org.apache.spark.sql.DataFrame
   * threads it spawns), and [[track]]/[[drain]] operate on the innermost
   * scope. A serving request running inside `withScope` can only release
   * its own frames — never those of a batch pipeline tracking into the
-  * global bin from another thread. Runners with sole ownership of the
-  * session (Verify, Bench, ScaleSweep, Reproduce) use the global bin
-  * and drain between queries, where nothing is mid-flight.
+  * global bin from another thread, nor a cache entry that a concurrent
+  * request's frame shares (the same plan): the last holder releases
+  * it. Runners with sole ownership of the session (Verify, Bench,
+  * ScaleSweep, Reproduce) use the global bin and drain between
+  * queries, where nothing is mid-flight.
   *
   * Frames with a bounded in-operator lifetime (e.g. the k-means Lloyd
   * loop base) should keep their local try/finally and never touch this.
@@ -48,7 +50,9 @@ import org.apache.spark.sql.DataFrame
 object CacheBin {
 
   private sealed trait Tracked
-  private final case class Persisted(df: DataFrame) extends Tracked
+  // `entry`: the session cache entry the frame's persist resolved to
+  private final case class Persisted(df: DataFrame, entry: Option[AnyRef])
+      extends Tracked
   // an eager localCheckpoint pins its backing RDD in the BlockManager;
   // DataFrame.unpersist does not free it — only unpersisting the RDD
   // does (otherwise release waits on driver GC + ContextCleaner, i.e.
@@ -62,6 +66,27 @@ object CacheBin {
   private val scoped =
     new InheritableThreadLocal[ConcurrentLinkedQueue[Tracked]]()
 
+  // Spark's CacheManager keys cached data by plan (`sameResult`), so
+  // scopes that persist the same plan — two requests over one catalog
+  // table, or asking the same question — share ONE cache entry. The
+  // first scope to drain would uncache it under the other's running
+  // plans, which then rebuild the buffers and re-persist them outside
+  // any bin. So each entry counts the tracked frames holding it, and
+  // only the last release unpersists. Guarded by its own monitor; the
+  // lookup and the release both run under it, so a release cannot land
+  // between another scope's lookup and its count. One gap is left: a
+  // persist that found another scope's entry, released before this
+  // scope's `track`, leaves the frame uncached; closing it needs the
+  // persist and the track in one call under this monitor.
+  private val holds = new java.util.IdentityHashMap[AnyRef, Integer]()
+
+  private def cacheEntry(df: DataFrame): Option[AnyRef] = df match {
+    case d: org.apache.spark.sql.classic.Dataset[_] =>
+      d.sparkSession.sharedState.cacheManager.lookupCachedData(d)
+        .map(_.cachedRepresentation.cacheBuilder)
+    case _ => None
+  }
+
   private def current: ConcurrentLinkedQueue[Tracked] = {
     val s = scoped.get()
     if (s != null) s else global
@@ -70,7 +95,15 @@ object CacheBin {
   /** Register an already-persisted frame for deferred release in the
     * innermost active scope (global when none).
     */
-  def track(df: DataFrame): DataFrame = { current.add(Persisted(df)); df }
+  def track(df: DataFrame): DataFrame = {
+    val entry = holds.synchronized {
+      val e = cacheEntry(df)
+      e.foreach(holds.merge(_, 1, (a: Integer, b: Integer) => a + b))
+      e
+    }
+    current.add(Persisted(df, entry))
+    df
+  }
 
   /** Register an eagerly-checkpointed frame (`localCheckpoint(true)`)
     * for deferred release: its backing RDD blocks are freed on
@@ -150,8 +183,13 @@ object CacheBin {
     var t = q.poll()
     while (t != null) {
       t match {
-        case Persisted(df)      => df.unpersist(blocking)
-        case Checkpointed(rdds) => rdds.foreach(_.unpersist(blocking))
+        case Persisted(df, None) => df.unpersist(blocking)
+        case Persisted(df, Some(e)) => holds.synchronized {
+          val left = holds.get(e) - 1
+          if (left > 0) holds.put(e, left)
+          else { holds.remove(e); df.unpersist(blocking) }
+        }
+        case Checkpointed(rdds)  => rdds.foreach(_.unpersist(blocking))
       }
       t = q.poll()
     }

@@ -2,6 +2,8 @@ package graft.serve
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, Semaphore}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -49,6 +51,20 @@ import graft.evalx.{Evaluator, ExItem}
   * timeouts (`SqlBackend`), so a stuck query cancels cleanly instead of
   * wedging the session. `com.sun.net.httpserver` keeps the dependency
   * footprint at zero (JDK-only), per the build's no-new-deps rule.
+  *
+  * Concurrency contract: pipeline requests (`/api/run`,
+  * `/api/run_batch`) run concurrently, at most
+  * `sparkContext.defaultParallelism` of them at once — the point where
+  * statement work saturates the cores (about 4 in flight on 4 vCPU).
+  * Further requests wait for a permit in arrival order; nothing is
+  * rejected. A request holds ONE permit for its whole body (a batch
+  * runs its items in turn), and its JSON is parsed before it asks for
+  * one. `/healthz` never waits. The session keeps its FIFO scheduler;
+  * what keeps requests apart is per request: a `serving <id>` job
+  * group on its own worker thread (`Serving`; a timeout cancels that
+  * group only), one job group per SQL statement (`SqlBackend`), and a
+  * `CacheBin` scope whose exit drain releases only the request's own
+  * frames.
   */
 final class ServingServer(spark: SparkSession, pipeline: Actor,
     port: Int = 0,
@@ -103,34 +119,32 @@ final class ServingServer(spark: SparkSession, pipeline: Actor,
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.createContext("/api/run", (ex: HttpExchange) => handle(ex, runOne))
   server.createContext("/api/run_batch", (ex: HttpExchange) => handle(ex, runBatch))
-  server.createContext("/healthz", (ex: HttpExchange) => {
-    val bytes = """{"status":"ok"}""".getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(200, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  })
-  // pipeline requests SERIALIZE through `apiLock` (the reference notes
-  // its app "works for single requests" — a shared SparkSession wants
-  // one pipeline in flight, and job-group cancels keep each bounded),
-  // but the HTTP executor itself is a pool so /healthz answers even
-  // while a pipeline request is running — a liveness probe that blocks
-  // behind a 20-minute query would restart a healthy server
-  private val apiLock = new Object
-  server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+  server.createContext("/healthz", (ex: HttpExchange) =>
+    respond(ex, 200, mapper.createObjectNode().put("status", "ok")))
+  // the handler pool is unbounded so /healthz answers while every
+  // permit is held (a liveness probe that blocks behind a 20-minute
+  // query would restart a healthy server); `inFlight` bounds the
+  // pipeline requests, fairly, so waiting requests go in arrival order
+  private val inFlight =
+    new Semaphore(math.max(1, spark.sparkContext.defaultParallelism), true)
+  private val handlers = {
+    val n = new AtomicInteger(0)
+    Executors.newCachedThreadPool(r =>
+      new Thread(r, ServingServer.HandlerThreadPrefix + n.incrementAndGet()))
+  }
+  server.setExecutor(handlers)
 
   def start(): Int = { server.start(); boundPort }
-  def stop(): Unit = server.stop(0)
+  /** Stop listening and release the handler pool: `HttpServer.stop`
+    * leaves a caller-supplied executor running, so it is shut down
+    * here — requests in flight finish, then its threads exit.
+    */
+  def stop(): Unit = { server.stop(0); handlers.shutdown() }
   def boundPort: Int = server.getAddress.getPort
 
   private def handle(ex: HttpExchange,
-      route: JsonNode => (Int, ObjectNode)): Unit = apiLock.synchronized {
-    // Each request runs in its own CacheBin scope: the per-request
-    // worker thread inherits it, its results are materialized before
-    // the route returns, and the scope's exit drain releases ONLY this
-    // request's operator-persisted frames — never those of a batch
-    // pipeline mid-flight on another thread in the same session.
-    val (status, body) = graft.core.CacheBin.withScope {
+      route: JsonNode => (Int, ObjectNode)): Unit = {
+    val (status, body) =
       try {
         if (ex.getRequestMethod != "POST")
           (405, err("POST required"))
@@ -138,13 +152,23 @@ final class ServingServer(spark: SparkSession, pipeline: Actor,
           val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
           val root = mapper.readTree(raw)
           if (root == null || !root.isObject) (400, err("JSON object body required"))
-          else route(root)
+          else {
+            inFlight.acquireUninterruptibly()
+            // the per-request worker threads inherit the scope, results
+            // are materialized before the route returns, and the exit
+            // drain releases only this request's frames
+            try graft.core.CacheBin.withScope(route(root))
+            finally inFlight.release()
+          }
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
           (500, err(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}"))
       }
-    }
+    respond(ex, status, body)
+  }
+
+  private def respond(ex: HttpExchange, status: Int, body: ObjectNode): Unit = {
     val bytes = mapper.writeValueAsBytes(body)
     ex.getResponseHeaders.set("Content-Type", "application/json")
     ex.sendResponseHeaders(status, bytes.length.toLong)
@@ -264,4 +288,9 @@ final class ServingServer(spark: SparkSession, pipeline: Actor,
         }
     }
   }
+}
+
+object ServingServer {
+  /** Name prefix of the HTTP handler threads. */
+  val HandlerThreadPrefix = "graft-serve-http-"
 }

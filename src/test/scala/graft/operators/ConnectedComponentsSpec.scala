@@ -83,4 +83,26 @@ class ConnectedComponentsSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(losers == Set(7L, 9L, 101L), s"losers: $losers")
   }
+
+  test("job budget: components on a fixed parquet fixture") {
+    // a 6-chain, a 4-cycle, a 5-star and an isolated pair (17 nodes), read back
+    // from parquet so the optimizer cannot fold the input away. A change
+    // to the stop rule or the checkpoint schedule moves this number; a
+    // change that moves it updates it here and says why in CHANGES.md.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cc-budget").resolve("e").toString
+    Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 6L,
+      10L -> 11L, 11L -> 12L, 12L -> 13L, 13L -> 10L,
+      20L -> 21L, 20L -> 22L, 20L -> 23L, 20L -> 24L,
+      30L -> 31L).toDF("src", "dst").write.parquet(dir)
+    val e = spark.read.parquet(dir)
+    var out = Array.empty[org.apache.spark.sql.Row]
+    val jobs = org.apache.spark.JobBudget.count(spark) {
+      out = ConnectedComponents.components(e).collect()
+    }
+    assert(out.length == 17)
+    assert(jobs == ComponentsJobs, s"components ran $jobs jobs")
+  }
+
+  private val ComponentsJobs = 31
 }
