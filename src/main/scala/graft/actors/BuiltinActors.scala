@@ -2,6 +2,7 @@ package graft.actors
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.operators.{FastExecSelect, RowOps}
 
@@ -86,14 +87,8 @@ final case class ExecSelector(spark: SparkSession) extends Actor {
   val name = "ExecSelector"
   override val outputName = "pred_sql"
   override val skill = "execute candidates, pick fastest of largest agreement group"
-  def act(ds: DataFrame): DataFrame = {
-    val key = "instance_id"
-    val rows = ds.select(col(key), col("pred_sql_list")).collect().map { r =>
-      val sel = FastExecSelect.select(spark, r.getSeq[String](1))
-      (r.getString(0), sel.map(_.sql).orNull)
+  def act(ds: DataFrame): DataFrame =
+    Actor.rowwise(ds, outputName, StringType) { r =>
+      FastExecSelect.select(spark, r.getSeq[String](r.fieldIndex("pred_sql_list"))).map(_.sql).orNull
     }
-    import spark.implicits._
-    ds.drop(outputName).join(
-      rows.toSeq.toDF(key, outputName), key)
-  }
 }

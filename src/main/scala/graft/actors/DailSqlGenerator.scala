@@ -1,7 +1,7 @@
 package graft.actors
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.llm.LlmClient
 import graft.text.{SchemaLinking, SchemaRender, SqlText}
@@ -40,8 +40,6 @@ final case class DailSqlGenerator(
   }
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
     val meta = schema.select("table_name", "column_name").collect()
     val tables = meta.map(_.getString(0)).distinct.toSeq
@@ -54,9 +52,8 @@ final case class DailSqlGenerator(
       (maskOf(q, columns, tables), q, SqlText.skeleton(sql, tableSet, columnSet), sql)
     }
 
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val out = rows.map { r =>
-      val q = r.getString(1)
+    Actor.rowwise(ds, outputName, StringType) { r =>
+      val q = r.getAs[String]("question")
       val masked = maskOf(q, columns, tables)
       val shots = pool
         .map(p => (SqlText.jaccard(masked, p._1), p))
@@ -65,10 +62,8 @@ final case class DailSqlGenerator(
         .map { case (_, (_, exQ, skel, exSql)) =>
           s"-- Q: $exQ\n-- skeleton: $skel\n$exSql"
         }.mkString("\n\n")
-      val sql = SqlText.clean(llm.complete(
+      SqlText.clean(llm.complete(
         s"Schema:\n$schemaText\nExamples:\n$shots\nQuestion: $q\nSQL:"))
-      (r.getString(0), sql)
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }

@@ -1,7 +1,7 @@
 package graft.actors
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.exec.SqlBackend
 import graft.llm.LlmClient
@@ -21,30 +21,27 @@ final case class RslSqlGenerator(llm: LlmClient, backend: SqlBackend,
   override val skill = "RSL-SQL: bidir links -> preliminary + augmented -> binary exec selection"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
     // forward+backward linking over the whole dataset first
-    val linked = BiDirLinkParser(llm, schema).act(ds)
-    val rows = linked.select(col("instance_id"), col("question"), col("schema_links")).collect()
-    val out = rows.map { r =>
-      val (q, links) = (r.getString(1), r.getSeq[String](2))
-      val preliminary = SqlText.clean(llm.complete(
-        tpl.render("rslsql.preliminary", "schema" -> schemaText,
-          "links" -> links.mkString(", "), "question" -> q)))
-      val keywords = SqlText.parseList(llm.complete(
-        tpl.render("rslsql.keywords", "question" -> q)))
-      val augmented = SqlText.clean(llm.complete(
-        tpl.render("rslsql.augmented", "keywords" -> keywords.mkString(", "),
-          "schema" -> schemaText, "question" -> q)))
-      // binary selection by execution (largest-agreement degenerate to 2)
-      val chosen = graft.operators.FastExecSelect
-        .select(spark, Seq(preliminary, augmented))
-        .map(_.sql).getOrElse(preliminary)
-      // self-correction with execution feedback
-      (r.getString(0), SqlDebug.debugByFeedback(backend, llm, q, schemaText, chosen)._2)
+    Actor.afterInner(ds, BiDirLinkParser(llm, schema), outputName) { linked =>
+      Actor.rowwise(linked, outputName, StringType) { r =>
+        val (q, links) = (r.getAs[String]("question"), r.getSeq[String](r.fieldIndex("schema_links")))
+        val preliminary = SqlText.clean(llm.complete(
+          tpl.render("rslsql.preliminary", "schema" -> schemaText,
+            "links" -> links.mkString(", "), "question" -> q)))
+        val keywords = SqlText.parseList(llm.complete(
+          tpl.render("rslsql.keywords", "question" -> q)))
+        val augmented = SqlText.clean(llm.complete(
+          tpl.render("rslsql.augmented", "keywords" -> keywords.mkString(", "),
+            "schema" -> schemaText, "question" -> q)))
+        // binary selection by execution (largest-agreement degenerate to 2)
+        val chosen = graft.operators.FastExecSelect
+          .select(ds.sparkSession, Seq(preliminary, augmented))
+          .map(_.sql).getOrElse(preliminary)
+        // self-correction with execution feedback
+        SqlDebug.debugByFeedback(backend, llm, q, schemaText, chosen)._2
+      }
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 
@@ -59,20 +56,15 @@ final case class LinkAlignGenerator(llm: LlmClient, backend: SqlBackend,
   override val skill = "LinkAlign: reduce+link -> DIN-tiered generate -> exec debug"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val linked = ParseActors.linkAlign(llm, schema).act(ds)
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = linked.select(col("instance_id"), col("question"), col("schema_links")).collect()
-    val out = rows.map { r =>
-      val (q, links) = (r.getString(1), r.getSeq[String](2))
-      val draft = DinSqlMethod.generate(llm, schemaText, q, links)
-      val fin =
+    Actor.afterInner(ds, ParseActors.linkAlign(llm, schema), outputName) { linked =>
+      Actor.rowwise(linked, outputName, StringType) { r =>
+        val (q, links) = (r.getAs[String]("question"), r.getSeq[String](r.fieldIndex("schema_links")))
+        val draft = DinSqlMethod.generate(llm, schemaText, q, links)
         if (debug) SqlDebug.debugByFeedback(backend, llm, q, schemaText, draft)._2
         else draft
-      (r.getString(0), fin)
+      }
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 
@@ -88,15 +80,12 @@ final case class AdaptiveOptimizer(llm: LlmClient, backend: SqlBackend,
   override val skill = "adaptive: meta-SQL feedback -> triaged repair"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = ds.select(col("instance_id"), col("question"), col("pred_sql")).collect()
-    val out = rows.map { r =>
-      val (q, sql) = (r.getString(1), r.getString(2))
+    Actor.rowwise(ds, outputName, StringType) { r =>
+      val (q, sql) = (r.getAs[String]("question"), r.getAs[String]("pred_sql"))
       val fb = AdaptiveOptimize.feedback(backend, sql)
       val firstErr = fb.collectFirst { case (m, Left(e)) => (m, e) }
-      val repaired = firstErr match {
+      firstErr match {
         case None => sql // every meta-SQL executes — leave it alone
         case Some((_, err)) if AdaptiveOptimize.classify(err) != "logic" =>
           SqlDebug.debugByFeedback(backend, llm, q, schemaText, sql)._2
@@ -105,9 +94,7 @@ final case class AdaptiveOptimizer(llm: LlmClient, backend: SqlBackend,
             s"A sub-query misbehaves logically.\nFailing part: $meta\n" +
               s"Evidence: $err\nFull SQL: $sql\nQuestion: $q\nFixed SQL:"))
       }
-      (r.getString(0), repaired)
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.actors
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.exec.{ExecErr, ExecOk, SqlBackend}
 import graft.llm.LlmClient
@@ -65,24 +65,16 @@ final case class LlmGenerator(llm: LlmClient, schema: DataFrame,
   override val skill = s"$name: question + schema -> SQL via LLM"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
     val hasLinks = ds.columns.contains("schema_links")
-    val cols = if (hasLinks) Seq("instance_id", "question", "schema_links")
-      else Seq("instance_id", "question")
-    val rows = ds.select(cols.map(col): _*).collect()
-    val out = graft.llm.LlmPar.mapBounded(rows.toSeq, parallelism) { r =>
-      val links =
-        if (hasLinks && !r.isNullAt(2))
-          "\nSchema links:\n" + SchemaRender.formatLinks(r.getSeq[String](2))
-        else ""
-      val sql = SqlText.clean(llm.complete(
+    Actor.rowwise(ds, outputName, StringType, parallelism) { r =>
+      val i = if (hasLinks) r.fieldIndex("schema_links") else -1
+      val links = if (i < 0 || r.isNullAt(i)) ""
+        else "\nSchema links:\n" + SchemaRender.formatLinks(r.getSeq[String](i))
+      SqlText.clean(llm.complete(
         s"Write one SQL query.\nSchema:\n$schemaText$links\n" +
-          s"Question: ${r.getString(1)}\nSQL:"))
-      (r.getString(0), sql)
+          s"Question: ${r.getAs[String]("question")}\nSQL:"))
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 
@@ -96,16 +88,11 @@ final case class LlmDecomposer(llm: LlmClient,
   override val strategy: MergeStrategy = MergeStrategy.Extend
   override val skill = s"$name: question -> sub-question list"
 
-  def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val out = graft.llm.LlmPar.mapBounded(rows.toSeq, parallelism) { r =>
-      (r.getString(0), SqlText.parseList(llm.complete(
-        s"Decompose into sub-questions as a list.\nQuestion: ${r.getString(1)}\n[...]")))
+  def act(ds: DataFrame): DataFrame =
+    Actor.rowwise(ds, outputName, ArrayType(StringType), parallelism) { r =>
+      SqlText.parseList(llm.complete(
+        s"Decompose into sub-questions as a list.\nQuestion: ${r.getAs[String]("question")}\n[...]"))
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
-  }
 }
 
 /** Scaler actor (reference `BaseScale.py:13-16`: candidate
@@ -119,17 +106,11 @@ final case class LlmScaler(llm: LlmClient, generateNum: Int,
   override val strategy: MergeStrategy = MergeStrategy.Extend
   override val skill = s"$name: $generateNum SQL candidates per question"
 
-  def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val out = graft.llm.LlmPar.mapBounded(rows.toSeq, parallelism) { r =>
-      val cands = (0 until generateNum).map(i => SqlText.clean(llm.complete(
-        s"Variant $i: write one SQL query for: ${r.getString(1)}\nSQL:")))
-      (r.getString(0), cands.distinct)
+  def act(ds: DataFrame): DataFrame =
+    Actor.rowwise(ds, outputName, ArrayType(StringType), parallelism) { r =>
+      (0 until generateNum).map(i => SqlText.clean(llm.complete(
+        s"Variant $i: write one SQL query for: ${r.getAs[String]("question")}\nSQL:"))).distinct
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
-  }
 }
 
 /** Repair optimizer actor (the reference Optimizer family,
@@ -147,22 +128,17 @@ final case class RepairOptimizer(llm: LlmClient, backend: SqlBackend,
   override val skill = s"$name: $mode-mode SQL repair with execution feedback"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = ds.select(col("instance_id"), col("question"), col("pred_sql")).collect()
-    val out = graft.llm.LlmPar.mapBounded(rows.toSeq, parallelism) { r =>
-      val (q, sql) = (r.getString(1), r.getString(2))
-      val repaired = mode match {
+    Actor.rowwise(ds, outputName, StringType, parallelism) { r =>
+      val (q, sql) = (r.getAs[String]("question"), r.getAs[String]("pred_sql"))
+      mode match {
         case "experience" => SqlDebug.debugByExperience(llm, q, schemaText, sql)
         case "chain" =>
           val first = SqlDebug.debugByExperience(llm, q, schemaText, sql)
           SqlDebug.debugByFeedback(backend, llm, q, schemaText, first, debugTurns)._2
         case _ => SqlDebug.debugByFeedback(backend, llm, q, schemaText, sql, debugTurns)._2
       }
-      (r.getString(0), repaired)
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 

@@ -2,6 +2,7 @@ package graft.actors
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.exec.SqlBackend
 import graft.llm.LlmClient
@@ -25,12 +26,9 @@ final case class MacSqlGenerator(llm: LlmClient, backend: SqlBackend,
   override val outputName = "pred_sql"
   override val skill = "MAC-SQL: prune -> decompose -> generate+refine loop"
 
-  def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val out = rows.map { r =>
-      val q = r.getString(1)
+  def act(ds: DataFrame): DataFrame =
+    Actor.rowwise(ds, outputName, StringType) { r =>
+      val q = r.getAs[String]("question")
       // Selector: prune when large, guided by a quick LLM link pass
       val links = SchemaRender.parseSchemaLinkFromStr(llm.complete(
         tpl.render("macsql.links", "question" -> q)))
@@ -45,10 +43,8 @@ final case class MacSqlGenerator(llm: LlmClient, backend: SqlBackend,
       val draft = SqlText.clean(llm.complete(
         tpl.render("macsql.refine", "schema" -> schemaText,
           "subs" -> subs.mkString("; "), "question" -> q)))
-      (r.getString(0), SqlDebug.debugByFeedback(backend, llm, q, schemaText, draft)._2)
+      SqlDebug.debugByFeedback(backend, llm, q, schemaText, draft)._2
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
-  }
 }
 
 /** CHESS (reference `CHESSGenerate.py:58-648`): keyword extraction →
@@ -66,12 +62,9 @@ final case class ChessGenerator(llm: LlmClient, backend: SqlBackend,
   override val skill = "CHESS: entity retrieval -> candidates -> execute -> unit-test pick"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val out = rows.map { r =>
-      val q = r.getString(1)
+    Actor.rowwise(ds, outputName, StringType) { r =>
+      val q = r.getAs[String]("question")
       val keywords = SqlText.parseList(llm.complete(
         tpl.render("chess.keywords", "question" -> q)))
         .take(5)
@@ -87,11 +80,9 @@ final case class ChessGenerator(llm: LlmClient, backend: SqlBackend,
         tpl.render("chess.candidate", "index" -> i.toString,
           "schema" -> schemaText, "entities" -> entityContext,
           "question" -> q)))).distinct
-      val best = SelectActors.chessUnitTests(spark, llm, q, candidates)
+      SelectActors.chessUnitTests(ds.sparkSession, llm, q, candidates)
         .getOrElse(candidates.head)
-      (r.getString(0), best)
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 
@@ -109,21 +100,16 @@ final case class OpenSearchGenerator(llm: LlmClient, backend: SqlBackend,
   override val skill = "OpenSearch-SQL: column profile -> CoT candidates -> majority vote"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val out = rows.map { r =>
-      val q = r.getString(1)
+    Actor.rowwise(ds, outputName, StringType) { r =>
+      val q = r.getAs[String]("question")
       val profile = profileOf(q)
       val candidates = (0 until nCandidates).map(i => SqlText.clean(llm.complete(
         s"Candidate $i.\nSchema:\n$schemaText\nColumn profile:\n$profile\n" +
           s"Question: $q\nSQL:"))).distinct
-      val best = SelectActors.majorityVote(spark, candidates, Some(llm))
+      SelectActors.majorityVote(ds.sparkSession, candidates, Some(llm))
         .getOrElse(candidates.head)
-      (r.getString(0), best)
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 
@@ -137,16 +123,13 @@ final case class DinSqlGenerator(llm: LlmClient, schema: DataFrame) extends Acto
   override val skill = "DIN-SQL: CoT links -> difficulty tier -> tiered generation"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val linked = ParseActors.dinsql(llm, schema).act(ds)
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = linked.select(col("instance_id"), col("question"), col("schema_links")).collect()
-    val out = rows.map { r =>
-      (r.getString(0),
-        DinSqlMethod.generate(llm, schemaText, r.getString(1), r.getSeq[String](2)))
+    Actor.afterInner(ds, ParseActors.dinsql(llm, schema), outputName) { linked =>
+      Actor.rowwise(linked, outputName, StringType) { r =>
+        DinSqlMethod.generate(llm, schemaText, r.getAs[String]("question"),
+          r.getSeq[String](r.fieldIndex("schema_links")))
+      }
     }
-    ds.drop(outputName).join(out.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 

@@ -1,7 +1,8 @@
 package graft.actors
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 import graft.llm.LlmClient
 import graft.text.{SchemaRender, SqlText}
@@ -25,21 +26,16 @@ final case class CoTLinkParser(
   override val skill = s"$name: CoT schema linking over the rendered schema"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
-    val rows = ds.select(col("instance_id"), col("question")).collect()
-    val links = rows.map { r =>
-      val q = r.getString(1)
+    Actor.rowwise(ds, outputName, ArrayType(StringType)) { r =>
+      val q = r.getAs[String]("question")
       val prompt = template
         .replace("{schema}", schemaText)
         .replace("{question}", q)
         .replace("{context}", contextFor(q))
       val parsed = SchemaRender.parseSchemaLinkFromStr(llm.complete(prompt))
-      (r.getString(0), SchemaRender.normalizeLinks(parsed).typeC)
+      SchemaRender.normalizeLinks(parsed).typeC
     }
-    ds.drop(outputName).join(
-      links.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 
   /** `parallel_slice_parse` (`core/actor/parser/BaseParse.py:160-217`):
@@ -48,20 +44,13 @@ final case class CoTLinkParser(
     */
   def actSliced(ds: DataFrame, sliceSize: Int = 500,
       orderCol: String = "column_name"): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val sliced = graft.operators.RowOps.withSliceId(schema, orderCol, sliceSize)
     val sliceIds = sliced.select("slice_id").distinct()
       .collect().map(_.getLong(0)).sorted
-    val perSlice = sliceIds.map { sid =>
-      copy(schema = sliced.filter(col("slice_id") === sid).drop("slice_id"))
-        .act(ds)
-        .select(col("instance_id"), col(outputName))
+    val perSlice = sliceIds.toSeq.map { sid =>
+      copy(schema = sliced.filter(col("slice_id") === sid).drop("slice_id")).act(ds)
     }
-    val merged = perSlice.reduceLeft(_ union _)
-      .groupBy(col("instance_id"))
-      .agg(array_distinct(flatten(collect_list(col(outputName)))).as(outputName))
-    ds.drop(outputName).join(merged, "instance_id")
+    Actor.mergeById(ds, outputName, ArrayType(StringType), perSlice)(Actor.distinctLinks)
   }
 }
 
@@ -76,29 +65,20 @@ final case class BiDirLinkParser(llm: LlmClient, schema: DataFrame) extends Acto
   override val skill = "bidirectional linking: LLM forward + SQL-derived backward"
 
   def act(ds: DataFrame): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
     val schemaText = SchemaRender.parseSchemaFromDf(schema)
     val vocab = schema.select("table_name", "column_name").collect()
       .flatMap(r => Seq(r.getString(0).toLowerCase,
         s"${r.getString(0)}.${r.getString(1)}".toLowerCase,
         r.getString(1).toLowerCase)).toSet
     val hasPred = ds.columns.contains("pred_sql")
-    val cols = if (hasPred) Seq("instance_id", "question", "pred_sql")
-      else Seq("instance_id", "question")
-    val rows = ds.select(cols.map(col): _*).collect()
-    val links = rows.map { r =>
+    Actor.rowwise(ds, outputName, ArrayType(StringType)) { r =>
       val forward = SchemaRender.parseSchemaLinkFromStr(llm.complete(
-        s"Link the question to the schema.\n{schema}\nQuestion: ${r.getString(1)}\n"
+        s"Link the question to the schema.\n{schema}\nQuestion: ${r.getAs[String]("question")}\n"
           .replace("{schema}", schemaText) + "Schema_links: [...]"))
-      val backward =
-        if (hasPred && r.getString(2) != null)
-          SqlText.tokenize(r.getString(2).toLowerCase).filter(vocab.contains)
-        else Nil
-      (r.getString(0), SchemaRender.normalizeLinks(forward ++ backward).typeC)
+      val backward = Option(if (hasPred) r.getAs[String]("pred_sql") else null)
+        .fold(Seq.empty[String])(p => SqlText.tokenize(p.toLowerCase).filter(vocab.contains))
+      SchemaRender.normalizeLinks(forward ++ backward).typeC
     }
-    ds.drop(outputName).join(
-      links.toSeq.toDF("instance_id", outputName), "instance_id")
   }
 }
 

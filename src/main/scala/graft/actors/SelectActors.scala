@@ -1,10 +1,5 @@
 package graft.actors
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.SparkSession
 
 import graft.exec.SqlBackend
@@ -26,12 +21,8 @@ object SelectActors {
       parallelism: Int = 5): Option[String] = {
     if (candidates.isEmpty) return None
     val backend = new SqlBackend(spark, timeoutSec)
-    val pool = Executors.newFixedThreadPool(math.max(parallelism, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val rendered =
-      try Await.result(Future.sequence(candidates.map(c =>
-        Future(c -> backend.runToString(c)))), Duration.Inf)
-      finally pool.shutdown()
+    val rendered = graft.util.Par.mapBounded(candidates, parallelism)(c =>
+      c -> backend.runToString(c))
     val ok = rendered.filterNot(_._2.startsWith("Execution error:"))
     if (ok.isEmpty) return None
     val groups = ok.groupBy(_._2).values.toSeq

@@ -1,10 +1,5 @@
 package graft.evalx
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -97,15 +92,10 @@ class Evaluator(spark: SparkSession, timeoutSec: Int = 60, parallelism: Int = 5,
   }
 
   def evalAll(items: Seq[ExItem]): (Seq[ExOutcome], ExSummary) = {
-    val pool = Executors.newFixedThreadPool(math.max(parallelism, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val res = Await.result(
-        Future.sequence(items.map(i => Future(evalOne(i)))), Duration.Inf)
-      val scored = res.flatMap(_.score)
-      val avg = if (scored.isEmpty) 0.0 else scored.sum.toDouble / scored.size
-      (res, ExSummary(avg, scored.size, items.size))
-    } finally pool.shutdown()
+    val res = graft.util.Par.mapBounded(items, parallelism)(evalOne)
+    val scored = res.flatMap(_.score)
+    val avg = if (scored.isEmpty) 0.0 else scored.sum.toDouble / scored.size
+    (res, ExSummary(avg, scored.size, items.size))
   }
 
   /** Pass@n over n generation replicas (the reference's reproduction

@@ -18,26 +18,3 @@ final case class MockLlm(playbook: Seq[(String, String)] = Nil,
   def complete(prompt: String): String =
     playbook.collectFirst { case (k, v) if prompt.contains(k) => v }.getOrElse(default)
 }
-
-/** Bounded-parallel per-item LLM fan-out — the reference's
-  * `ThreadPoolExecutor(max_workers<=5)` around generation loops
-  * (`core/engine.py` task execution): LLM calls are network-bound, so
-  * a serial per-question loop makes benchmark latency O(n·RTT).
-  * Results keep item order. The per-call bound comes from the client
-  * (`HttpLlmClient` request timeout × retries); parallelism stays
-  * small because it multiplies concurrent requests to the inference
-  * tier, not CPU.
-  */
-object LlmPar {
-  def mapBounded[A, B](items: Seq[A], parallelism: Int = 5)(f: A => B): Seq[B] = {
-    if (items.isEmpty) return Seq.empty
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, items.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(items.map(a => scala.concurrent.Future(f(a)))),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
-  }
-}

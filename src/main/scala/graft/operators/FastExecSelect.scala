@@ -54,6 +54,8 @@ object FastExecSelect {
   def execCandidates(spark: SparkSession, sqls: Seq[String],
       timeoutSec: Int = 60, parallelism: Int = 5): Seq[CandidateExec] = {
     val backend = new SqlBackend(spark, timeoutSec)
+    // its own pool, not `graft.util.Par.mapBounded`: the outer deadline
+    // below needs the futures themselves to report partial results
     val pool = Executors.newFixedThreadPool(math.max(parallelism, 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {

@@ -1,9 +1,5 @@
 package graft.tasks
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
@@ -64,13 +60,9 @@ final case class SequenceTask(id: String, tasks: Seq[Task]) extends Task {
   * work, so the pool bounds concurrent jobs.
   */
 final case class ParallelTask(id: String, tasks: Seq[Task], maxWorkers: Int = 4) extends Task {
-  def run(): Map[String, DataFrame] = {
-    val pool = Executors.newFixedThreadPool(math.max(maxWorkers, 1))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(tasks.map(t => Future(t.run()))), Duration.Inf)
+  def run(): Map[String, DataFrame] =
+    graft.util.Par.mapBounded(tasks, maxWorkers)(_.run())
       .foldLeft(Map.empty[String, DataFrame])(_ ++ _)
-    finally pool.shutdown()
-  }
 }
 
 /** The `exec_process` grammar (reference `core/engine.py:601-718`):

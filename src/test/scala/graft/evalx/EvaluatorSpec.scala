@@ -166,4 +166,21 @@ class EvaluatorSpec extends SparkSpec {
     assert(FastExecSelect.groupAndPick(Seq(
       FastExecSelect.CandidateExec(0, "a", 1.0, Some("boom"), None))) == None)
   }
+
+  test("job budgets: evalOne on a success, a pred error and a gold error") {
+    // per statement that runs; an analysis error runs none. A change
+    // that moves a number updates it here and says why in CHANGES.md
+    val (ok, bad) = ("SELECT r_name FROM region ORDER BY r_name", "SELECT nope FROM region")
+    def jobs(item: ExItem): Int = {
+      ev.evalOne(item) // warm
+      org.apache.spark.JobBudget.count(spark)(ev.evalOne(item))
+    }
+    assert(jobs(ExItem("jb1", Some(ok), Some(ok))) == 2, "success: gold + pred")
+    assert(jobs(ExItem("jb2", Some(ok), Some(bad))) == 1, "pred error: gold only")
+    assert(jobs(ExItem("jb3", Some(bad), Some(ok))) == 0, "gold error: nothing runs")
+    val all = Seq(ExItem("jb1", Some(ok), Some(ok)), ExItem("jb2", Some(ok), Some(bad)),
+      ExItem("jb3", Some(bad), Some(ok)))
+    assert(org.apache.spark.JobBudget.count(spark)(ev.evalAll(all)) == 2 + 1 + 0,
+      "evalAll runs exactly its items' statements")
+  }
 }

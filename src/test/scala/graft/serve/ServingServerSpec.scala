@@ -454,8 +454,9 @@ class ServingServerSpec extends SparkSpec {
   }
 
   test("job budget: one warm /api/run") {
-    // pipeline collect + gold + pred statements; a change that moves this
-    // number updates it here and says why in CHANGES.md
+    // the gold and pred statements (the pipeline's flat local frame runs
+    // none); a change that moves this number updates it here and says
+    // why in CHANGES.md
     withServer("SELECT COUNT(*) AS n FROM region") { port =>
       val body = """{"instance_id":"jb1","question":"how many regions",
                    |"gold_sql":"SELECT COUNT(*) AS n FROM region"}""".stripMargin
@@ -469,7 +470,26 @@ class ServingServerSpec extends SparkSpec {
     }
   }
 
-  private val RunJobs = 6
+  test("job budget: one warm /api/run_batch") {
+    // three staged-reward items: a match, a wrong result, a broken gold
+    withServer("SELECT COUNT(*) AS n FROM region") { port =>
+      val body = """{"jb2":[
+          |  {"question":"count regions","gold_sql":"SELECT COUNT(*) AS n FROM region"},
+          |  {"question":"count regions","gold_sql":"SELECT COUNT(*) + 1 AS n FROM region"},
+          |  {"question":"count regions","gold_sql":"SELECT broken FROM nowhere"}
+          |]}""".stripMargin
+      assert(post(port, "/api/run_batch", body)._1 == 200) // warm
+      var status = 0
+      val jobs = org.apache.spark.JobBudget.count(spark) {
+        status = post(port, "/api/run_batch", body)._1
+      }
+      assert(status == 200)
+      assert(jobs == BatchJobs, s"/api/run_batch ran $jobs jobs")
+    }
+  }
+
+  private val RunJobs = 4
+  private val BatchJobs = 8
 }
 
 object ServingServerSpec {
